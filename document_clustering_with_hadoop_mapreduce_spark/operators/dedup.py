@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import MERSENNE_P, md5_int60, minhash_params, universal_hash
 from ..functions.text import tokens
+from .similarity import _cosine_pairs
 
 
 def exact_dup_groups(documents: DataFrame, key: Column, id_col: str = "doc_id") -> DataFrame:
@@ -1047,8 +1048,8 @@ def tfidf_cosine_pairs_blocked(
     matmuls — the exact all-pairs engine for corpora where the inverted
     index degenerates (flat document frequencies: every doc's top-T prefix
     hits the same hot terms and the term self-join goes quadratic in
-    rows). Same (doc_a, doc_b, cosine) frame, same 6dp HALF_UP rounding,
-    same >= threshold filter.
+    rows). Same (doc_a, doc_b, cosine) frame, same Spark ``F.round(_, 6)``
+    rounding, same >= threshold filter.
 
     Plan (the ``similarity.block_topk_pairs`` partitioning, sparse
     payload): each doc's normalized top-T vector rides as ONE row of
@@ -1059,10 +1060,12 @@ def tfidf_cosine_pairs_blocked(
     bounded by 2 * block_size * top_t regardless of global V), builds the
     local dense matrix once, and scores all of the task's pairs with a
     row-chunked NumPy matmul (``row_chunk`` bounds the score-buffer at
-    row_chunk x block_size doubles). Each unordered pair is produced
+    row_chunk x block_size doubles; the scorer is the similarity
+    operators' ``_cosine_pairs``). Each unordered pair is produced
     exactly once: diagonal tasks take id<id, cross tasks take one side
-    from each block. Threshold filtering happens INSIDE the task, so only
-    qualifying pairs ever leave it.
+    from each block. A threshold cut (widened by the scorer's
+    TIE_MARGIN) happens INSIDE the task, so only candidate pairs ever
+    leave it; Spark rounds them and applies the exact filter.
 
     Measured (sf0.1, local[32], 5,000 docs / 12.5M pairs, warm): triples
     plan 97 s (3.0e8 join rows over 29 flat-df terms), this plan ~4 s.
@@ -1092,56 +1095,37 @@ def tfidf_cosine_pairs_blocked(
         import numpy as np
         import pandas as pd
 
-        out_a: list[int] = []
-        out_b: list[int] = []
-        out_c: list[float] = []
-        if len(pdf):
-            ti, tj = int(pdf["ti"].iloc[0]), int(pdf["tj"].iloc[0])
-            ids = pdf["doc_id"].to_numpy()
-            terms: list[str] = []
-            ws: list[float] = []
-            starts = np.zeros(len(pdf) + 1, dtype=np.int64)
-            for i, tw in enumerate(pdf["tw"]):
-                for p in tw:
-                    terms.append(p["term"])
-                    ws.append(p["w"])
-                starts[i + 1] = len(terms)
-            vocab, tcodes = np.unique(np.asarray(terms, dtype=object), return_inverse=True)
-            m = np.zeros((len(pdf), len(vocab)), dtype=np.float64)
-            rows = np.repeat(np.arange(len(pdf)), np.diff(starts))
-            m[rows, tcodes] = np.asarray(ws, dtype=np.float64)
+        ti, tj = int(pdf["ti"].iloc[0]), int(pdf["tj"].iloc[0])
+        ids = pdf["doc_id"].to_numpy()
+        terms: list[str] = []
+        ws: list[float] = []
+        starts = np.zeros(len(pdf) + 1, dtype=np.int64)
+        for i, tw in enumerate(pdf["tw"]):
+            for p in tw:
+                terms.append(p["term"])
+                ws.append(p["w"])
+            starts[i + 1] = len(terms)
+        vocab, tcodes = np.unique(np.asarray(terms, dtype=object), return_inverse=True)
+        m = np.zeros((len(pdf), len(vocab)), dtype=np.float64)
+        rows = np.repeat(np.arange(len(pdf)), np.diff(starts))
+        m[rows, tcodes] = np.asarray(ws, dtype=np.float64)
 
-            def emit(sc, left_ids, right_ids, lt_mask=None):
-                # HALF_UP at 6dp (numpy's round is half-even; Spark/DuckDB
-                # round half up) — weights are >= 0 so floor(+0.5) suffices
-                r = np.floor(sc * 1e6 + 0.5) / 1e6
-                hit = r >= t
-                if lt_mask is not None:
-                    hit &= lt_mask
-                ii, jj = np.nonzero(hit)
-                a, b = left_ids[ii], right_ids[jj]
-                lo, hi = np.minimum(a, b), np.maximum(a, b)
-                out_a.extend(lo.tolist())
-                out_b.extend(hi.tolist())
-                out_c.extend(r[ii, jj].tolist())
-
-            if ti == tj:
-                for r0 in range(0, len(pdf), row_chunk):
-                    r1 = min(r0 + row_chunk, len(pdf))
-                    sc = m[r0:r1] @ m.T
-                    lt = ids[r0:r1, None] < ids[None, :]
-                    emit(sc, ids[r0:r1], ids, lt)
-            else:
-                li = np.nonzero(pdf["blk"].to_numpy() == ti)[0]
-                ri = np.nonzero(pdf["blk"].to_numpy() == tj)[0]
-                mr_t = m[ri].T
-                for r0 in range(0, len(li), row_chunk):
-                    sel = li[r0 : r0 + row_chunk]
-                    emit(m[sel] @ mr_t, ids[sel], ids[ri])
+        # rows are already unit: score plain dot products (norms None), so
+        # no recomputed norm moves a score before Spark rounds it
+        if ti == tj:  # each unordered pair once: id < id
+            left = right = slice(None)
+        else:  # one side from each block
+            blk = pdf["blk"].to_numpy()
+            left, right = np.nonzero(blk == ti)[0], np.nonzero(blk == tj)[0]
+        i, j, c = _cosine_pairs(
+            m[left], m[right], None, None, row_chunk, ids[left], ids[right],
+            pair="lt" if ti == tj else None, threshold=t,
+        )
+        a, b = ids[left][i], ids[right][j]
         return pd.DataFrame({
-            "doc_a": pd.Series(out_a, dtype="int64"),
-            "doc_b": pd.Series(out_b, dtype="int64"),
-            "cosine": pd.Series(out_c, dtype="float64"),
+            "doc_a": np.minimum(a, b).astype("int64"),
+            "doc_b": np.maximum(a, b).astype("int64"),
+            "cosine": c,
         })
 
     # explicit one-partition-per-task repartition on the grouping keys:
@@ -1155,6 +1139,8 @@ def tfidf_cosine_pairs_blocked(
         rep.repartition(n_tasks, F.col("ti"), F.col("tj"))
         .groupBy("ti", "tj")
         .applyInPandas(score, "doc_a long, doc_b long, cosine double")
+        .withColumn("cosine", F.round("cosine", 6))
+        .filter(F.col("cosine") >= t)
     )
 
 

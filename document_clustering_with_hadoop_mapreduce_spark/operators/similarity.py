@@ -18,10 +18,11 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_similarity
+from .topk import top_k_per_group
 
 
 def _as_double(col: Column) -> Column:
@@ -87,40 +88,109 @@ _LSH_SIZING_CACHE: dict = {}
 _LSH_SIZING_CACHE_MAX = 32
 
 
-def _round6(c):
-    """6dp HALF_UP rounding of a NumPy score array:
-    sign(c) * floor(|c|*1e6 + 0.5) / 1e6.
+# In-task candidates this close to the cut survive it: to the k-th best
+# unrounded cosine in top-k mode, to the threshold in threshold mode.
+# Wider than one 6-dp rounding step, so a candidate that ties the cut
+# once Spark rounds it (F.round(cos, 6)) is never dropped before that.
+TIE_MARGIN = 2e-6
 
-    Emulates Spark's ``F.round(col, 6)`` — but not bit-for-bit in every
-    case, and the exact mismatch class is pinned here by name: the JVM
-    rounds via BigDecimal HALF_UP on the SHORTEST DECIMAL REPRESENTATION
-    of the double, while this floors the BINARY double scaled by 1e6.
-    The two can disagree when a double's shortest repr reads at/above a
-    .5 boundary while its binary value times 1e6 lands strictly below it
-    — verified example: x = 0.0005045 (repr exactly '0.0005045', so the
-    decimal path rounds up to 0.000505) has x*1e6 = 504.4999..., so this
-    path floors down to 0.000504. Note printing at a boundary is NOT
-    sufficient: 0.1234565's binary x*1e6 rounds exactly onto 123456.5
-    and both paths round up together. (This is a different class from
-    float summation order, which perturbs the ~1e-16 tail before
-    rounding.) A straddle could flip a top-k rank or a threshold edge vs
-    the DuckDB oracle; none has ever occurred across the 50-slot oracle
-    gate at three SFs — accepted, named, and since round 10 MONITORED:
-    ``plans.round6_monitor`` recomputes every similarity slot's scores
-    unrounded and counts actual disagreements (asserted 0 in
-    tests/test_round6_boundary.py) plus a conservative near-boundary
-    early-warning count.
 
-    Magnitude contract: exact only while |c|*1e6 < 2^52 — already at odd
-    integers in [2^52, 2^53) the +0.5 is unrepresentable (ulp = 1) and
-    rounds half-to-even up, landing the floor one past the true value
-    (verified numerically at 2^52 + 1; see the enforced twin guard in
-    kmeans.assign_nearest_arrow). Always true for cosines (|c| <= 1) and
-    any score in [-4.5e9, 4.5e9].
+def _cosine_pairs(
+    left, right, lnorm, rnorm, row_chunk, lid, rid,
+    pair=None, k=None, per_col=False, threshold=None,
+):
+    """The one in-task scorer of the Arrow similarity operators: score the
+    rows of ``left`` against the rows of ``right`` and return the
+    surviving ``(i, j, cos)`` arrays — row indices into each side and the
+    UNROUNDED score ``left[i] . right[j] / (lnorm[i] * rnorm[j])``, 0.0
+    where the norm product is 0, or the plain dot product when the norms
+    are None (rows the caller already made unit). Rounding is left to
+    Spark, once, after the candidates leave the task.
+
+    ``left`` is scored ``row_chunk`` rows at a time, so one matmul holds
+    at most row_chunk x len(right) scores. ``pair`` filters by the id
+    arrays ``lid``/``rid``: "ne" drops a row scored against itself, "lt"
+    keeps lid < rid (each unordered pair once).
+
+    Top-k mode (``k``): per left row — per right column with ``per_col``
+    — every candidate within TIE_MARGIN of the chunk's k-th best score,
+    so the kept set is a superset of the local top-k after rounding.
+    Candidates with the SAME unrounded score round alike, so the rank
+    tail's id tie-break (the other side's id) orders them: of each such
+    run only the k lowest ids are kept. So however many identical
+    vectors or zero-norm rows tie, a row (column) leaves at most k
+    candidates per distinct score per chunk.
+    Threshold mode (``threshold``): every candidate with
+    cos >= threshold - TIE_MARGIN. NaN scores never survive.
     """
     import numpy as np
 
-    return np.sign(c) * np.floor(np.abs(c) * 1e6 + 0.5) / 1e6
+    def cap_exact_ties(c, keep, tid):
+        # rows of ``c`` are the groups, ``tid`` the tie-break ids of its
+        # columns: of each run of EQUAL scores in a row keep the k lowest
+        # ids. Only a row holding more than k candidates can lose any.
+        hot = np.nonzero(keep.sum(axis=1) > k)[0]
+        if not len(hot):
+            return
+        order = np.argsort(tid, kind="stable")
+        sub = np.where(keep[np.ix_(hot, order)], c[np.ix_(hot, order)], -np.inf)
+        s = np.argsort(sub, axis=1, kind="stable")  # equal scores stay in id order
+        sv = np.take_along_axis(sub, s, axis=1)
+        # in sorted order a score is among the first k of its run exactly
+        # when the entry k places back differs from it
+        first_k = np.ones(sv.shape, dtype=bool)
+        first_k[:, k:] = sv[:, k:] != sv[:, :-k]
+        r, p = np.nonzero(first_k & (sv > -np.inf))
+        keep[hot] = False
+        keep[hot[r], order[s[r, p]]] = True
+
+    out = []
+    for r0 in range(0, len(left), row_chunk):
+        sl = slice(r0, r0 + row_chunk)
+        c = left[sl] @ right.T
+        if lnorm is not None:
+            den = lnorm[sl][:, None] * rnorm[None, :]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                c = np.where(den == 0.0, 0.0, c / den)
+        keep = ~np.isnan(c)
+        if pair == "ne":
+            keep &= lid[sl][:, None] != rid[None, :]
+        elif pair == "lt":
+            keep &= lid[sl][:, None] < rid[None, :]
+        if threshold is not None:
+            keep &= c >= threshold - TIE_MARGIN
+        else:
+            axis = 0 if per_col else 1
+            n = c.shape[axis]
+            if n > k:
+                kth = np.take(
+                    np.partition(np.where(keep, c, -np.inf), n - k, axis=axis),
+                    [n - k],
+                    axis=axis,
+                )
+                keep &= c >= kth - TIE_MARGIN
+                if per_col:
+                    cap_exact_ties(c.T, keep.T, lid[sl])
+                else:
+                    cap_exact_ties(c, keep, rid)
+        i, j = np.nonzero(keep)
+        out.append((i + r0, j, c[i, j]))
+    if not out:
+        none = np.empty(0, dtype=np.intp)
+        return none, none, np.empty(0)
+    return tuple(np.concatenate(x) for x in zip(*out))
+
+
+def _top_k_by_cos(candidates: DataFrame, k: int) -> DataFrame:
+    """The similarity rank tail: round each candidate's ``cos`` once, with
+    Spark's ``F.round(cos, 6)`` (the rule of every other rounded slot),
+    then keep each query's ``k`` best by (cos desc, vec_id asc)."""
+    return top_k_per_group(
+        candidates.withColumn("cos", F.round("cos", 6)),
+        ["query_id"],
+        [F.col("cos").desc(), F.col("vec_id").asc()],
+        k,
+    ).select("query_id", "vec_id", "cos", "rank")
 
 
 def _id_pd_dtype(id_type) -> str:
@@ -164,7 +234,10 @@ def cosine_topk(
     cosine an interpreted per-row HOF (~60 us) — both the round-7-class
     defects the quadratic-family bench measures for. Per-partition local
     top-k by (cos desc, id asc) is a superset of the global top-k, so
-    the result is identical (same 6dp HALF_UP rounding; float summation
+    the result is identical. The kernel (``_cosine_pairs``) also keeps
+    every candidate within TIE_MARGIN of a query's k-th score, so a
+    candidate that only ties after rounding still reaches the rank tail,
+    which rounds once with Spark's ``F.round(cos, 6)`` (float summation
     order differs from the JVM fold at ~1e-16, the accepted class).
 
     Round 9: the contract is ENFORCED, not just documented — the collect
@@ -202,6 +275,7 @@ def cosine_topk(
 
         if not qids:
             return
+        rid = np.asarray(qids)
         Q = np.asarray(qmat, dtype=np.float64)
         qn = np.sqrt((Q * Q).sum(axis=1))
         # score-buffer bound (round 9): chunk the corpus rows so one matmul
@@ -215,30 +289,12 @@ def cosine_topk(
             ids = pdf["vec_id"].to_numpy()
             m = np.asarray(pdf["evec"].tolist(), dtype=np.float64)
             en = np.sqrt((m * m).sum(axis=1))
-            out_q, out_v, out_c = [], [], []
-            for r0 in range(0, len(ids), row_chunk):
-                sl = slice(r0, r0 + row_chunk)
-                den = en[sl][:, None] * qn[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    c = np.where(den == 0.0, 0.0, (m[sl] @ Q.T) / den)
-                r = _round6(c)  # 6dp HALF_UP, see _round6
-                ids_sl = ids[sl]
-                for j, qid in enumerate(qids):
-                    keep = ids_sl != qid  # self excluded
-                    cj, vj = r[keep, j], ids_sl[keep]
-                    order = np.lexsort((vj, -cj))[:k]
-                    out_q.extend([qid] * len(order))
-                    out_v.extend(vj[order].tolist())
-                    out_c.extend(cj[order].tolist())
-            yield pd.DataFrame({"query_id": out_q, "vec_id": out_v, "cos": out_c})
+            i, j, c = _cosine_pairs(
+                m, Q, en, qn, row_chunk, ids, rid, pair="ne", k=k, per_col=True
+            )
+            yield pd.DataFrame({"query_id": rid[j], "vec_id": ids[i], "cos": c})
 
-    candidates = e.mapInPandas(local_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _top_k_by_cos(e.mapInPandas(local_topk, out_schema), k)
 
 
 def random_hyperplanes(n_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
@@ -372,9 +428,13 @@ def lsh_bucketed_topk(
     directions of a cross task). The previous shape was a bucket-keyed
     self-join with an interpreted ~60 us HOF cosine per candidate row and
     a window over the full candidate stream; the final exact rank here
-    orders at most S * k candidate rows per vector. Same 6dp HALF_UP
-    rounding and vec_id tie-break; per-vector local top-k is a superset
-    of the global one, so output is identical.
+    orders S * k candidate rows per vector, plus the near-ties within
+    TIE_MARGIN of a task's k-th score (at most k per distinct score:
+    ``_cosine_pairs`` caps exact ties — a bucket of identical vectors, a
+    zero-norm vector — by the id tie-break). Per-vector
+    local top-k, widened by TIE_MARGIN (see ``cosine_topk``), is a
+    superset of the global one; Spark rounds and ranks once, with the
+    vec_id tie-break, so output is identical.
 
     Round 10 (closing the VERDICT-r9 headroom item): ``sub_blocks=None``
     (the default) sizes S PER BUCKET from sampled occupancy —
@@ -467,46 +527,31 @@ def lsh_bucketed_topk(
         import numpy as np
         import pandas as pd
 
-        out_q, out_v, out_c = [], [], []
-        if len(pdf):
-            ti, tj = int(pdf["__ti"].iloc[0]), int(pdf["__tj"].iloc[0])
-            ids = pdf["vec_id"].to_numpy()
-            m = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
-            norms = np.sqrt((m * m).sum(axis=1))
+        ti, tj = int(pdf["__ti"].iloc[0]), int(pdf["__tj"].iloc[0])
+        ids = pdf["vec_id"].to_numpy()
+        m = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
+        norms = np.sqrt((m * m).sum(axis=1))
+        out = []
 
-            # score-buffer bound: row_chunk x |ri| doubles per matmul
-            def emit_topk(li, ri, exclude_self):
-                rid = ids[ri]
-                # chunk-invariant right side hoisted: fancy indexing copies
-                mri_t, nri = m[ri].T, norms[ri]
-                for r0 in range(0, len(li), row_chunk):
-                    sel = li[r0 : r0 + row_chunk]
-                    dots = m[sel] @ mri_t
-                    den = norms[sel][:, None] * nri[None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        c = np.where(den == 0.0, 0.0, dots / den)
-                    r = _round6(c)  # 6dp HALF_UP, see _round6
-                    for row, qi in enumerate(sel):
-                        cj, vj = r[row], rid
-                        if exclude_self:
-                            keep = vj != ids[qi]
-                            cj, vj = cj[keep], vj[keep]
-                        order = np.lexsort((vj, -cj))[:k]
-                        out_q.extend([ids[qi]] * len(order))
-                        out_v.extend(vj[order].tolist())
-                        out_c.extend(cj[order].tolist())
+        # score-buffer bound: row_chunk x |ri| doubles per matmul
+        def emit_topk(li, ri, pair):
+            i, j, c = _cosine_pairs(
+                m[li], m[ri], norms[li], norms[ri], row_chunk, ids[li], ids[ri],
+                pair=pair, k=k,
+            )
+            out.append(pd.DataFrame(
+                {"query_id": ids[li][i], "vec_id": ids[ri][j], "cos": c}
+            ))
 
-            subs = pdf["__sub"].to_numpy()
-            if ti == tj:
-                idx = np.arange(len(pdf))
-                emit_topk(idx, idx, exclude_self=True)
-            else:  # cross task: both directions, one matmul's worth each
-                li = np.nonzero(subs == ti)[0]
-                ri = np.nonzero(subs == tj)[0]
-                if len(li) and len(ri):
-                    emit_topk(li, ri, exclude_self=False)
-                    emit_topk(ri, li, exclude_self=False)
-        return pd.DataFrame({"query_id": out_q, "vec_id": out_v, "cos": out_c})
+        subs = pdf["__sub"].to_numpy()
+        if ti == tj:
+            emit_topk(slice(None), slice(None), "ne")  # self excluded
+        else:  # cross task: both directions, one matmul's worth each
+            li = np.nonzero(subs == ti)[0]
+            ri = np.nonzero(subs == tj)[0]
+            emit_topk(li, ri, None)
+            emit_topk(ri, li, None)
+        return pd.concat(out, ignore_index=True)
 
     par = embeddings.sparkSession.sparkContext.defaultParallelism
     candidates = (
@@ -514,11 +559,7 @@ def lsh_bucketed_topk(
         .groupBy("bucket", "__ti", "__tj")
         .applyInPandas(score, out_schema)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k_by_cos(candidates, k)
 
 
 def top_similar_pairs(embeddings: DataFrame, k: int = 20,
@@ -776,49 +817,40 @@ def ivf_topk(
         import numpy as np
         import pandas as pd
 
+        probes = {}  # cell -> (probe ids, probe matrix, probe norms)
+        for cell, plist in by_cell.items():
+            Q = np.asarray([p[1] for p in plist], dtype=np.float64)
+            rid = np.asarray([p[0] for p in plist])
+            probes[cell] = (rid, Q, np.sqrt((Q * Q).sum(axis=1)))
         for pdf in batches:
-            if not len(pdf) or not by_cell:
+            if not len(pdf) or not probes:
                 continue
-            out_q, out_v, out_c = [], [], []
+            out = []
             cells_np = pdf["cell"].to_numpy()
             ids = pdf["vec_id"].to_numpy()
             m = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
             en = np.sqrt((m * m).sum(axis=1))
             for cell in np.unique(cells_np):
-                plist = by_cell.get(int(cell))
-                if not plist:
+                if int(cell) not in probes:
                     continue
+                rid, Q, qn = probes[int(cell)]
                 sel = np.nonzero(cells_np == cell)[0]
-                Q = np.asarray([p[1] for p in plist], dtype=np.float64)
-                qn = np.sqrt((Q * Q).sum(axis=1))
                 # score-buffer bound (round 9): chunk the cell's rows so one
                 # matmul never holds more than ~4M doubles regardless of how
                 # many probes target the cell; per-chunk local top-k remains
-                # a superset of the global one (final window re-ranks)
-                row_chunk = max(1, SCORE_BUFFER_DOUBLES // len(plist))
-                for r0 in range(0, len(sel), row_chunk):
-                    sub = sel[r0 : r0 + row_chunk]
-                    den = en[sub][:, None] * qn[None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        c = np.where(den == 0.0, 0.0, (m[sub] @ Q.T) / den)
-                    r = _round6(c)  # 6dp HALF_UP, see _round6
-                    ids_sub = ids[sub]
-                    for j, (qid, _) in enumerate(plist):
-                        keep = ids_sub != qid  # self excluded
-                        cj, vj = r[keep, j], ids_sub[keep]
-                        order = np.lexsort((vj, -cj))[:k]
-                        out_q.extend([qid] * len(order))
-                        out_v.extend(vj[order].tolist())
-                        out_c.extend(cj[order].tolist())
-            yield pd.DataFrame({"query_id": out_q, "vec_id": out_v, "cos": out_c})
+                # a superset of the global one (the rank tail re-ranks)
+                row_chunk = max(1, SCORE_BUFFER_DOUBLES // len(rid))
+                i, j, c = _cosine_pairs(
+                    m[sel], Q, en[sel], qn, row_chunk, ids[sel], rid,
+                    pair="ne", k=k, per_col=True,
+                )
+                out.append(pd.DataFrame(
+                    {"query_id": rid[j], "vec_id": ids[sel][i], "cos": c}
+                ))
+            if out:
+                yield pd.concat(out, ignore_index=True)
 
-    candidates = cells.mapInPandas(local_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _top_k_by_cos(cells.mapInPandas(local_topk, out_schema), k)
 
 
 def quantization_params(
@@ -1147,68 +1179,48 @@ def semdedup(
         # (higher-order functions are interpreted, measured ~60 us/pair —
         # on a 12.8k-vector hot cluster that was 5,400 core-seconds; the
         # matmul form is the same ~82M dots in ~10 Gflop of BLAS).
-        # Identical output: dot/(||a||*||b||) with the zero-norm->0.0
-        # guard and 6dp HALF_UP (away-from-zero) rounding BEFORE the
-        # threshold filter, exactly like functions.vector.cosine_similarity
-        # + F.round. Per-task memory: 2*(|c|/S)*d for the matrix plus the
-        # chunked (row_chunk x cols) score buffer.
+        # Same dot/(||a||*||b||) with the zero-norm->0.0 guard as
+        # functions.vector.cosine_similarity; the scores leave the task
+        # unrounded (within TIE_MARGIN of the threshold) and Spark rounds
+        # them before the threshold filter below. Per-task memory:
+        # 2*(|c|/S)*d for the matrix plus the chunked (row_chunk x cols)
+        # score buffer.
         import numpy as np
         import pandas as pd
 
-        out: dict[str, list] = {k: [] for k in ("cluster", "vec_a", "vec_b", "cos", "cos_a", "cos_b")}
-        row_chunk = 4096
-        if len(pdf):
-            cluster = int(pdf["cluster"].iloc[0])
-            ti, tj = int(pdf["__ti"].iloc[0]), int(pdf["__tj"].iloc[0])
-            ids = pdf["vec_id"].to_numpy()
-            ccos = pdf["centroid_cos"].to_numpy(dtype=np.float64)
-            m = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
-            norms = np.sqrt((m * m).sum(axis=1))
-
-            def emit(li, ri):
-                # chunk-invariant right side hoisted: fancy indexing copies
-                mri_t, nri = m[ri].T, norms[ri]
-                rid, rcos = ids[ri], ccos[ri]
-                for r0 in range(0, len(li), row_chunk):
-                    sel = li[r0 : r0 + row_chunk]
-                    dots = m[sel] @ mri_t
-                    den = norms[sel][:, None] * nri[None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        c = np.where(den == 0.0, 0.0, dots / den)
-                    r = _round6(c)  # 6dp HALF_UP, see _round6
-                    hit = r >= thr
-                    if ti == tj:  # each unordered pair once: id < id
-                        hit &= ids[sel][:, None] < rid[None, :]
-                    ii, jj = np.nonzero(hit)
-                    a, b = ids[sel][ii], rid[jj]
-                    ca, cb = ccos[sel][ii], rcos[jj]
-                    swap = a > b
-                    out["cluster"].extend([cluster] * len(ii))
-                    out["vec_a"].extend(np.where(swap, b, a).tolist())
-                    out["vec_b"].extend(np.where(swap, a, b).tolist())
-                    out["cos"].extend(r[ii, jj].tolist())
-                    out["cos_a"].extend(np.where(swap, cb, ca).tolist())
-                    out["cos_b"].extend(np.where(swap, ca, cb).tolist())
-
-            subs = pdf["__sub"].to_numpy()
-            if ti == tj:
-                idx = np.arange(len(pdf))
-                emit(idx, idx)
-            else:  # cross task: one side from each sub-block
-                emit(np.nonzero(subs == ti)[0], np.nonzero(subs == tj)[0])
+        cluster = int(pdf["cluster"].iloc[0])
+        ti, tj = int(pdf["__ti"].iloc[0]), int(pdf["__tj"].iloc[0])
+        ids = pdf["vec_id"].to_numpy()
+        ccos = pdf["centroid_cos"].to_numpy(dtype=np.float64)
+        m = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
+        norms = np.sqrt((m * m).sum(axis=1))
+        subs = pdf["__sub"].to_numpy()
+        if ti == tj:  # each unordered pair once: id < id
+            li = ri = slice(None)
+        else:  # cross task: one side from each sub-block
+            li, ri = np.nonzero(subs == ti)[0], np.nonzero(subs == tj)[0]
+        i, j, c = _cosine_pairs(
+            m[li], m[ri], norms[li], norms[ri], 4096, ids[li], ids[ri],
+            pair="lt" if ti == tj else None, threshold=thr,
+        )
+        a, b = ids[li][i], ids[ri][j]
+        ca, cb = ccos[li][i], ccos[ri][j]
+        swap = a > b
         return pd.DataFrame({
-            "cluster": pd.Series(out["cluster"], dtype="int32"),
-            "vec_a": pd.Series(out["vec_a"], dtype=id_pd_dtype),
-            "vec_b": pd.Series(out["vec_b"], dtype=id_pd_dtype),
-            "cos": pd.Series(out["cos"], dtype="float64"),
-            "cos_a": pd.Series(out["cos_a"], dtype="float64"),
-            "cos_b": pd.Series(out["cos_b"], dtype="float64"),
+            "cluster": pd.Series(np.full(len(c), cluster), dtype="int32"),
+            "vec_a": pd.Series(np.where(swap, b, a), dtype=id_pd_dtype),
+            "vec_b": pd.Series(np.where(swap, a, b), dtype=id_pd_dtype),
+            "cos": c,
+            "cos_a": np.where(swap, cb, ca),
+            "cos_b": np.where(swap, ca, cb),
         })
 
     pairs = (
         rep.repartition(n_tasks, F.col("cluster"), F.col("__ti"), F.col("__tj"))
         .groupBy("cluster", "__ti", "__tj")
         .applyInPandas(_score, pair_schema)
+        .withColumn("cos", F.round("cos", 6))
+        .filter(F.col("cos") >= thr)
     )
     if materialize:
         # the pair frame has two consumers (the returned edges + the
@@ -1302,15 +1314,10 @@ def ivf_probe_indexed(
         .select(
             "query_id",
             "vec_id",
-            F.round(cosine_similarity(F.col("qvec"), F.col("vec")), 6).alias("cos"),
+            cosine_similarity(F.col("qvec"), F.col("vec")).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _top_k_by_cos(scored, k)
 
 
 def mmr_select(
@@ -1522,10 +1529,11 @@ def mine_hard_negatives(
         F.col(anchor_col).alias("query_id"), F.col(pos_col).alias("vec_id")
     )
     negs = topk.join(pos_pairs, ["query_id", "vec_id"], "left_anti")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     out = (
-        negs.withColumn("neg_rank", F.row_number().over(w))
-        .where(F.col("neg_rank") <= n_neg)
+        top_k_per_group(
+            negs, ["query_id"], [F.desc("cos"), F.asc("vec_id")], n_neg,
+            rank_col="neg_rank",
+        )
         .select(
             F.col("query_id").alias("anchor_id"),
             F.col("vec_id").alias("negative_id"),

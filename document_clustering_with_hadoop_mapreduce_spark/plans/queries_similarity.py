@@ -347,10 +347,9 @@ def _int8_oracle_ctes() -> str:
 # path carries the PID so two processes on the same SF never overwrite
 # each other's live index (mode=overwrite only makes SEQUENTIAL re-builds
 # idempotent). Maps (app_id, realpath key) -> (table, centroids,
-# (mins, scales)) — the int8 slice and the round-6 monitor read the
-# cached quantization params so they score with EXACTLY the affine rule
-# the slot used (recomputing could diverge if the fixture were
-# regenerated mid-process).
+# (mins, scales)) — the int8 slice reads the cached quantization params
+# so it scores with EXACTLY the affine rule the slot derived (recomputing
+# could diverge if the fixture were regenerated mid-process).
 _IVF_INDEX_CACHE: dict[
     tuple[str, str], tuple[str, list[list[float]], tuple[list[float], list[float]]]
 ] = {}

@@ -5,6 +5,7 @@ the exact float top-k, and the no-shuffle plan shape.
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -264,6 +265,14 @@ def test_requantize_point_bit_identical_incl_wrap_regression(spark):
     assert got[0][0] == mins[0] + 255 * scales[0]
 
 
+def boundary_hits(scores) -> int:
+    """Count values within 1e-9 of a 0.5e-6 rounding tie (|x| * 1e6 within
+    1e-3 of n + 0.5): the tie-ADJACENT values on which two round() rules
+    could differ."""
+    y = np.abs(np.asarray(scores, dtype=np.float64)) * 1e6
+    return int((np.abs(y - np.floor(y) - 0.5) < 1e-3).sum())
+
+
 def test_param_rounding_agrees_with_duckdb_on_tie_adjacent_inputs(spark, sf_dir):
     """Continuous measurement for the int8 oracle's round() agreement
     claim: quantization_params rounds raw min/max/scale with Python
@@ -272,18 +281,13 @@ def test_param_rounding_agrees_with_duckdb_on_tie_adjacent_inputs(spark, sf_dir)
     decimal tie (Python ties-to-even on the dyadic cases, DuckDB
     half-away-from-zero). The fused int8 gate verifies agreement on
     TODAY's fixture end-to-end; this tripwire keeps the claim measured
-    as fixtures regenerate, the _round6 monitor philosophy: find every
-    tie-ADJACENT raw value (conservative 1e-9 band — sf0.01 measures
+    as fixtures regenerate: find every tie-ADJACENT raw value (conservative 1e-9 band — sf0.01 measures
     one such min today) and assert Python and DuckDB round those to the
     SAME double. The DuckDB side must cast to DOUBLE: a bare Python
     float repr parses as DECIMAL, whose round() returns Decimal — a
     different (and irrelevant) code path from the oracle's parquet
     DOUBLE columns."""
     import duckdb
-
-    from document_clustering_with_hadoop_mapreduce_spark.plans.round6_monitor import (
-        boundary_hits,
-    )
 
     levels = (1 << BITS) - 1
     stats = (
@@ -309,3 +313,34 @@ def test_param_rounding_agrees_with_duckdb_on_tie_adjacent_inputs(spark, sf_dir)
             "fixture; a hash mismatch there is this class, not an engine "
             "defect"
         )
+
+
+def test_boundary_hits_counter():
+    # 0.1234565 scaled sits within 1e-3 of 123456.5 -> near; plain values no
+    assert boundary_hits([0.1234565]) == 1
+    assert boundary_hits([0.123456, 0.123457, -0.9999994]) == 0
+    assert boundary_hits([-0.1234565, 0.1234565]) == 2
+    assert boundary_hits([]) == 0
+
+
+@pytest.mark.slow
+def test_cached_qparams_equal_recompute(spark, sf_dir):
+    """The ann_ivf_topk slot caches its affine params in _IVF_INDEX_CACHE
+    and its int8 slice scores with the cached copy. That is sound ONLY
+    while cached == recomputed over an immutable fixture — pin the
+    equivalence, so a future divergence of the slot's param rule from
+    quantization_params fails HERE, not as a silent slice drift."""
+    from document_clustering_with_hadoop_mapreduce_spark.caches import sf_key
+    from document_clustering_with_hadoop_mapreduce_spark.plans.queries_similarity import (
+        _IVF_INDEX_CACHE,
+        Q_BITS,
+    )
+    from document_clustering_with_hadoop_mapreduce_spark.plans.registry import (
+        all_queries,
+    )
+
+    all_queries()["ann_ivf_topk"].spark(spark, sf_dir)  # populates the cache
+    key = (spark.sparkContext.applicationId, sf_key(sf_dir))
+    assert key in _IVF_INDEX_CACHE, "slot construction no longer caches"
+    cached = _IVF_INDEX_CACHE[key][2]
+    assert cached == quantization_params(_emb(spark, sf_dir), Q_BITS)
